@@ -94,12 +94,16 @@ def test_merge_append_replay_same_batch(spark, tmp_path):
     assert read_current(spark, store).count() == 1
 
 
-def test_http_sink_errors_as_data(spark):
+def test_http_sink_errors_as_data(spark, tmp_path):
     df = spark.createDataFrame(
         [("1", "ok"), ("2", "boom"), ("3", "ok")], "id string, content string"
     )
+    # python workers are separate processes: count calls in a file
+    calls = str(tmp_path / "post_calls")
 
     def poster(rec):
+        with open(calls, "a") as fh:
+            fh.write(rec["id"] + "\n")
         if rec["content"] == "boom":
             raise ValueError("api rejected")
 
@@ -109,6 +113,9 @@ def test_http_sink_errors_as_data(spark):
     assert report["success"] == 2
     assert report["failed"] == 1
     assert "ValueError" in report["errors"][0]
+    # one delivery per row: the tally and the error sample share one run
+    with open(calls) as fh:
+        assert sorted(fh.read().split()) == ["1", "2", "3"]
 
 
 def test_compact_materializes_dedup(spark, tmp_path):

@@ -1,5 +1,8 @@
 import json
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from wellmeet_data_pipeline_spark.schemas import REVIEW
 from wellmeet_data_pipeline_spark.sinks.merge import read_current
 from wellmeet_data_pipeline_spark.streaming.pipeline import run_ingest_pipeline
@@ -143,11 +146,31 @@ def test_full_orchestration_dag(spark, tmp_path):
     revs = read_current(spark, rev_store)
     assert revs.count() == 4  # 2 restaurants x 2 reviews
 
-    # second activation: p2 re-landed (no new reviews crawled), p3 new
+    # second activation: p2 re-landed (no new reviews crawled), p3 new —
+    # and p3's first fetch fails AFTER the batch commits p3 to the
+    # restaurant store, so the activation dies mid-batch.  A file ledger
+    # tracks attempts (python workers are separate processes).
+    ledger = str(tmp_path / "fetch_ledger")
+    fetch_ok = make_review_fetcher()
+
+    def flaky_fetch(place_id, page):
+        import os
+
+        if place_id == "p3" and not os.path.exists(ledger):
+            open(ledger, "w").close()
+            raise RuntimeError("injected fetch fault for p3")
+        return fetch_ok(place_id, page)
+
     _drop(landing, "r2.json", [rest("p2", "국수"), rest("p3", "곱창")])
-    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, make_review_fetcher())
+    with pytest.raises(StreamingQueryException):
+        run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, flaky_fetch)
+    # the replay finds p3 already stored, so only the durable backlog
+    # still knows p3's reviews are owed
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, flaky_fetch)
     assert read_current(spark, rest_store, id_col="place_id").count() == 3
-    assert read_current(spark, rev_store).count() == 6  # only p3's crawl ran
+    revs = read_current(spark, rev_store)
+    assert revs.count() == 6  # only p3's crawl ran
+    assert revs.filter("place_id = 'p3'").count() == 2
 
 
 def test_session_window_stream_matches_batch(spark, tmp_path):
@@ -385,7 +408,7 @@ def test_debounce_stream_kept_anchored(spark, tmp_path):
         TimestampType,
     )
 
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
     from wellmeet_data_pipeline_spark.streaming.stateful import debounce_stream
 
     schema = StructType(
@@ -401,15 +424,9 @@ def test_debounce_stream_kept_anchored(spark, tmp_path):
 
     def run():
         stream = landing_stream(spark, str(landing), schema)
-        (
-            debounce_stream(stream, ["user_id"], "ts", cooldown_seconds=300)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        kept = debounce_stream(stream, ["user_id"], "ts", cooldown_seconds=300)
+        run_available_now(
+            kept.writeStream.outputMode("append").format("parquet").option("path", out), ckpt
         )
 
     # chain at 0, 2, 4, 6 minutes: lag-gap thinning would keep 0 only
@@ -602,6 +619,66 @@ def test_orchestration_fanout_capped_and_fully_drained(spark, tmp_path):
 
     pending = _read_pending(spark, backlog)
     assert pending is None or pending.count() == 0
+
+
+def test_drain_backlog_commits_fresh_seq_per_activation(spark, tmp_path):
+    """Each post-stream drain commits its reviews under a seq past every
+    drain seq already in the review store: two activations that each
+    leave backlog write two distinct drain batch directories instead of
+    re-opening the first one."""
+    from wellmeet_data_pipeline_spark.sinks.merge import committed_batch_seqs
+    from wellmeet_data_pipeline_spark.streaming.orchestration import (
+        DRAIN_SEQ_BASE,
+        run_orchestration,
+    )
+
+    landing = tmp_path / "seq_landing"
+    landing.mkdir()
+    rest_store = str(tmp_path / "seq_rest")
+    rev_store = str(tmp_path / "seq_rev")
+    ckpt = str(tmp_path / "seq_ckpt")
+
+    def rest(pid):
+        return {
+            "place_id": pid, "name": f"n{pid}", "thumbnail_url": "", "category": "한식",
+            "page": 1, "origin_address": "서울특별시 마포구 마포대로 109",
+            "address": "서울특별시 마포구 마포대로 109", "latitude": None, "longitude": None,
+        }
+
+    def fetch(place_id, page):
+        return [{"author": "a", "content": f"review of {place_id}", "visit_date": "d",
+                 "place_id": place_id}]
+
+    def drain_dirs():
+        return sorted(s for s in committed_batch_seqs(rev_store) if s >= DRAIN_SEQ_BASE)
+
+    # 3 new keys under a cap of 2: the micro-batch ingests 2, the drain 1
+    _drop(landing, "a.json", [rest(f"a{i}") for i in range(3)])
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, fetch,
+                      max_keys_per_batch=2)
+    assert drain_dirs() == [DRAIN_SEQ_BASE]
+    _drop(landing, "b.json", [rest(f"b{i}") for i in range(3)])
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, fetch,
+                      max_keys_per_batch=2)
+    assert drain_dirs() == [DRAIN_SEQ_BASE, DRAIN_SEQ_BASE + 1]
+    assert read_current(spark, rev_store, id_col=["place_id", "id"]).count() == 6
+
+
+def test_only_pipeline_module_reads_or_triggers_streams():
+    """streaming/pipeline.py owns the landing reader (`landing_stream`)
+    and the availableNow activation (`run_available_now`); no other
+    streaming module builds its own, so the copies cannot grow back."""
+    import pathlib
+    import re
+
+    import wellmeet_data_pipeline_spark.streaming as streaming
+
+    root = pathlib.Path(streaming.__file__).parent
+    offenders = sorted(
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if p != root / "pipeline.py" and re.search(r"readStream|\.trigger\(", p.read_text())
+    )
+    assert offenders == []
 
 
 def test_backlog_compaction_preserves_pending(spark, tmp_path):

@@ -87,7 +87,12 @@ def post_partitioned(
 
 def post_report(results: DataFrame, max_errors: int = 10) -> dict:
     """The reference's event result shape (save-reviews/lambda_function.py:
-    96-110): totals + first `max_errors` error messages."""
+    96-110): totals + first `max_errors` error messages.
+
+    `results` is evaluated ONCE: the tally and the error sample are two
+    actions, and over the lazy `post_partitioned` frame each would POST
+    every row again."""
+    results = results.localCheckpoint(eager=True)
     tally = results.agg(
         F.count("*").alias("total"),
         F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("success"),

@@ -60,6 +60,18 @@ BATCH_DIR_KEY = "batch_commit"
 STALE_CLAIM_SECONDS = 900.0
 
 
+def committed_batch_seqs(path: str) -> list[int]:
+    """Seqs of the `batch_commit=<seq>` directories committed under a
+    store (none if the store does not exist yet)."""
+    if not os.path.isdir(path):
+        return []
+    return [
+        int(d.split("=", 1)[1])
+        for d in os.listdir(path)
+        if d.startswith(f"{BATCH_DIR_KEY}=") and d.split("=", 1)[1].isdigit()
+    ]
+
+
 def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) -> int:
     """Optimistic multi-writer commit claim: atomically reserve the next
     batch sequence number for a store via exclusive-create of a marker
@@ -93,11 +105,7 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
         # started life in explicit-seq mode): claiming one of those seqs
         # would make merge_append treat the new batch as already-committed
         # and silently drop it
-        existing += [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith(f"{BATCH_DIR_KEY}=") and d.split("=", 1)[1].isdigit()
-        ]
+        existing += committed_batch_seqs(path)
         seq = max(existing, default=-1) + 1
         try:
             fd = os.open(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_streaming_key_counts(
@@ -45,9 +46,7 @@ def run_streaming_key_counts(
     """Drain the landing stream (availableNow), appending per-batch
     partial counts keyed by (key, batch) — one dim-sized groupBy per
     micro-batch, never a rescan of the store."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = batch_df.groupBy(key_col).agg(F.count("*").alias("n"))
@@ -61,13 +60,7 @@ def run_streaming_key_counts(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_heavy_hitters(
@@ -115,9 +108,7 @@ def run_streaming_active_days(
     merge-append store here.  The rolling read (current_rolling_active)
     is then a pure function of the store: no window state, no event
     rescan."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = batch_df.select(
@@ -134,13 +125,7 @@ def run_streaming_active_days(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_rolling_active(
@@ -181,9 +166,7 @@ def run_streaming_term_counts(
     exactly-once without read-modify-write."""
     from wellmeet_data_pipeline_spark.functions.text import normalized_text
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
@@ -212,13 +195,7 @@ def run_streaming_term_counts(
         finally:
             counts.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_source_drift(
@@ -271,9 +248,7 @@ def run_streaming_quantile_sketch(
     here."""
     from wellmeet_data_pipeline_spark.operators.aggregations import quantile_sketch
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sk = quantile_sketch(
@@ -289,13 +264,7 @@ def run_streaming_quantile_sketch(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_quantiles(
@@ -342,7 +311,6 @@ def run_streaming_length_bins(
     is keyed (source, bin, batch), so a replayed batch overwrites its
     own contribution instead of double-counting)."""
     from wellmeet_data_pipeline_spark.operators.scoring import length_bins
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
 
     stream = landing_stream(spark, landing_dir, schema)
 
@@ -366,13 +334,7 @@ def run_streaming_length_bins(
         finally:
             partial.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_source_psi(spark: SparkSession, bins_store: str, n_bins: int = 10) -> DataFrame:
@@ -410,9 +372,7 @@ def run_streaming_period_totals(
     run_streaming_key_counts: partials are identified by (group, period,
     batch seq), replays re-append the same identity and dedup on read,
     so period totals are exactly-once without read-modify-write."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         totals = (
@@ -432,13 +392,7 @@ def run_streaming_period_totals(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_changepoint(
@@ -593,9 +547,7 @@ def run_streaming_event_log(
     tie)).  Same store contract as the partial-count stores: replays
     re-append the same identity and dedup on read, so the log is
     exactly-once under the foreachBatch replay contract."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.filter(F.col(id_col).isNotNull())
@@ -609,13 +561,7 @@ def run_streaming_event_log(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_scd2_history(

@@ -26,7 +26,7 @@ from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.joins import bloom_bit_positions
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_streaming_bloom_bits(
@@ -75,13 +75,7 @@ def run_streaming_bloom_bits(
         finally:
             new_bits.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_bloom_prefilter_stats(

@@ -35,6 +35,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     merge_append,
     read_current_or_none,
 )
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_streaming_cdc_apply(
@@ -45,15 +46,10 @@ def run_streaming_cdc_apply(
     schema: StructType,
     key_col: str,
     order_cols: Sequence[str],
-    batch_format: str = "json",
 ) -> None:
     """Drain the changelog landing stream (availableNow), appending each
     batch's per-key latest rows (tombstones included) to the store."""
-    reader = spark.readStream.schema(schema)
-    if batch_format == "json":
-        stream = reader.option("multiLine", "true").json(landing_dir)
-    else:
-        stream = reader.format(batch_format).load(landing_dir)
+    stream = landing_stream(spark, landing_dir, schema)
 
     orders = list(order_cols)
 
@@ -71,13 +67,7 @@ def run_streaming_cdc_apply(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_state(

@@ -34,7 +34,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_corpus_pipeline(
@@ -235,13 +235,7 @@ def run_corpus_pipeline(
             fresh, store_path, id_col="fingerprint", partition_col=None, batch_seq=batch_id
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def read_corpus(spark: SparkSession, store_path: str) -> DataFrame:

@@ -21,7 +21,7 @@ from pyspark.sql.types import StructType
 from wellmeet_data_pipeline_spark.functions.enrichment import embed_text
 from wellmeet_data_pipeline_spark.operators.similarity import embedding_near_dup_pairs
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_embedding_pipeline(
@@ -41,13 +41,7 @@ def run_embedding_pipeline(
         embedded = embed_text(batch_df.dropDuplicates([id_col]), text_col=text_col, dim=dim)
         merge_append(embedded, store_path, id_col=id_col, partition_col=None, batch_seq=batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def store_near_dups(
@@ -107,10 +101,4 @@ def run_rag_index_pipeline(
         )
         merge_append(keyed, store_path, id_col="chunk_key", partition_col=None, batch_seq=batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)

@@ -46,7 +46,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_exactsubstr_dedup(
@@ -161,13 +161,7 @@ def run_exactsubstr_dedup(
             cleaned, out_store, id_col=id_col, partition_col=None, batch_seq=batch_id
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def read_clean_corpus(

@@ -38,7 +38,7 @@ from wellmeet_data_pipeline_spark.operators.similarity import (
     ivf_seed_centroids,
 )
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def init_ivf_store(
@@ -103,13 +103,7 @@ def run_ivf_maintenance(
             batch_seq=batch_id + 1,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_index_report(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 _REGISTRY_SCHEMA = "entity_id long, entity_name string"
 
@@ -45,9 +46,7 @@ def run_streaming_fuzzy_upsert(
     1-short variant was registered first)."""
     from wellmeet_data_pipeline_spark.operators.linkage import fuzzy_link_edit1
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exact within-batch dedup: keep the lowest record id per name.
@@ -119,13 +118,7 @@ def run_streaming_fuzzy_upsert(
         finally:
             recs.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_entities(spark: SparkSession, store_path: str) -> DataFrame:

@@ -8,15 +8,18 @@ three network hops, a job queue.
 
 Here: one foreachBatch.  Per micro-batch of landed restaurants —
 validate (P4) → fill defaults (P7) → insert-if-absent into the
-restaurant store (J2/K2) → the batch's NEW place_ids become the seed
-frame for the review ingest (K5's job-per-restaurant collapses into
+restaurant store (J2/K2), with the batch's NEW place_ids appended to a
+durable fan-out backlog first → the pending keys become the seed frame
+for the review ingest (K5's job-per-restaurant collapses into
 partition-per-key scheduling) → incremental review ingest (J1) into the
-review store.  The only driver-side materialization is the new-key list
-(bounded by batch size, not corpus size).
+review store → the keys are marked done.  The only driver-side
+materialization is the pending-key list (bounded by `max_keys_per_batch`
+when set, by batch size otherwise — never by corpus size).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,16 +28,22 @@ from pyspark.sql import functions as F
 from wellmeet_data_pipeline_spark.operators.projections import fill_rds_defaults, require_fields
 from wellmeet_data_pipeline_spark.pipelines import ingest_reviews
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.sinks.merge import (
+    committed_batch_seqs,
+    merge_append,
+    read_current_or_none,
+)
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
+
+# drain rounds commit reviews under seqs from here up, clear of the
+# foreachBatch batch ids the stream commits them under
+DRAIN_SEQ_BASE = 1_000_000
 
 
 def _read_backlog_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     # narrow catch: ONLY path-does-not-exist may read as "no backlog yet".
     # A transient read failure must propagate — treating it as empty would
     # make the caller proceed without the carried-over obligations.
-    import os
-
     if not os.path.exists(path):
         return None
     return spark.read.parquet(path)
@@ -60,22 +69,22 @@ def _append_marks(keys: DataFrame, backlog_store: str, op: str) -> None:
     )
 
 
-def _take_chunk(todo: DataFrame, max_keys: int) -> list[str]:
-    """First `max_keys` place_ids in deterministic order — the ONE bounded
-    driver materialization of the fan-out."""
-    return [
-        r["place_id"]
-        for r in todo.orderBy("place_id").limit(max_keys).collect()
-    ]
+def _take_chunk(todo: DataFrame, max_keys: int | None) -> list[str]:
+    """First `max_keys` place_ids (all of them when None) in deterministic
+    order — the ONE driver materialization of the fan-out."""
+    todo = todo.orderBy("place_id")
+    if max_keys is not None:
+        todo = todo.limit(max_keys)
+    return [r["place_id"] for r in todo.collect()]
 
 
-def _ingest_capped(
+def _ingest_pending(
     spark: SparkSession,
     pending: DataFrame,
     backlog_store: str,
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
-    max_keys: int,
+    max_keys: int | None,
     batch_seq: int,
 ) -> None:
     """Ingest up to `max_keys` pending keys, marking them done afterwards.
@@ -94,28 +103,36 @@ def _ingest_capped(
     _append_marks(chunk_df, backlog_store, "done")
 
 
+def _check_cap(max_keys_per_batch: int | None) -> None:
+    if max_keys_per_batch is not None and max_keys_per_batch < 1:
+        raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
+
+
 def drain_backlog(
     spark: SparkSession,
     backlog_store: str,
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
-    max_keys_per_batch: int,
-    start_seq: int = 1_000_000,
+    max_keys_per_batch: int | None,
 ) -> None:
-    """Drain any carried-over fan-out backlog to empty, one capped chunk
-    per round — every driver collect stays <= max_keys_per_batch."""
-    if max_keys_per_batch < 1:
-        raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
-    round_no = 0
+    """Drain any carried-over fan-out backlog to empty, one chunk of at
+    most `max_keys_per_batch` keys (None: all pending keys) per round.
+
+    Each round commits its reviews under a fresh seq past every drain seq
+    already in the review store, so no drain re-opens an earlier batch
+    directory; drain seqs start at DRAIN_SEQ_BASE, clear of the stream's
+    batch ids."""
+    _check_cap(max_keys_per_batch)
+    seq = max([DRAIN_SEQ_BASE - 1, *committed_batch_seqs(review_store)])
     while True:
         pending = _read_pending(spark, backlog_store)
         if pending is None or pending.isEmpty():
             return
-        _ingest_capped(
+        seq += 1
+        _ingest_pending(
             spark, pending.localCheckpoint(eager=True), backlog_store, review_store,
-            review_fetcher, max_keys_per_batch, start_seq + round_no,
+            review_fetcher, max_keys_per_batch, seq,
         )
-        round_no += 1
 
 
 def run_orchestration(
@@ -130,19 +147,23 @@ def run_orchestration(
 ) -> None:
     """availableNow activation of the whole §3.3 DAG.
 
+    Every new place_id becomes a durable 'todo' mark in `backlog_store`
+    before the restaurant store commits it, and is marked 'done' only
+    after its reviews are ingested, so a crash anywhere in the batch
+    leaves the review obligation for the replay or the post-stream drain.
+    `backlog_store` defaults to `<checkpoint_dir>/fanout_backlog`: like
+    the checkpoint, the backlog is replay state of this one stream.
+
     `max_keys_per_batch` bounds the one driver-side materialization (the
-    new-key list driving the per-key review fan-out): each micro-batch
-    ingests at most that many keys and persists the overflow to
-    `backlog_store`, which later batches — and a final post-stream drain —
-    keep draining under the same cap.  Without the cap a backfill-sized
-    batch would build a driver list proportional to the batch (the
-    reference's one-Batch-job-per-restaurant loop has the same unbounded
-    fan-out, lambda_function.py:145-183)."""
-    if max_keys_per_batch is not None:
-        if backlog_store is None:
-            raise ValueError("max_keys_per_batch requires backlog_store")
-        if max_keys_per_batch < 1:
-            raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
+    key list driving the per-key review fan-out): each micro-batch
+    ingests at most that many pending keys, and the overflow waits in the
+    backlog for later batches and the post-stream drain.  None means no
+    cap — a backfill-sized batch then builds a driver list proportional
+    to the batch (the reference's one-Batch-job-per-restaurant loop has
+    the same unbounded fan-out, lambda_function.py:145-183)."""
+    _check_cap(max_keys_per_batch)
+    if backlog_store is None:
+        backlog_store = os.path.join(checkpoint_dir, "fanout_backlog")
     stream = landing_stream(spark, restaurant_landing_dir, RESTAURANT)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -154,17 +175,7 @@ def run_orchestration(
             else spark.createDataFrame([], "place_id string")
         )
         fresh = valid.join(existing, "place_id", "left_anti")
-        # K5's one-Batch-job-per-restaurant → seed frame over the NEW keys
-        if max_keys_per_batch is None:
-            merge_append(fresh, restaurant_store, id_col="place_id",
-                         partition_col=None, batch_seq=batch_id)
-            new_place_ids = [r["place_id"] for r in fresh.select("place_id").collect()]
-            if new_place_ids:
-                ingest_reviews(
-                    spark, new_place_ids, review_fetcher, review_store,
-                    batch_seq=batch_id,
-                )
-            return
+        # K5's one-Batch-job-per-restaurant → todo marks over the NEW keys,
         # durable FIRST — and specifically BEFORE the restaurant-store
         # commit: `fresh` is an anti join against the store, so a crash
         # after the store commit but before the todo-append would replay
@@ -179,24 +190,15 @@ def run_orchestration(
         pending = _read_pending(spark, backlog_store)
         if pending is None:
             return
-        # materialize BEFORE _ingest_capped appends done-marks: the
+        # materialize BEFORE _ingest_pending appends done-marks: the
         # pending lineage reads the log being appended to
-        _ingest_capped(
+        _ingest_pending(
             spark, pending.localCheckpoint(eager=True), backlog_store, review_store,
             review_fetcher, max_keys_per_batch, batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if max_keys_per_batch is not None:
-        drain_backlog(
-            spark, backlog_store, review_store, review_fetcher, max_keys_per_batch
-        )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+    drain_backlog(spark, backlog_store, review_store, review_fetcher, max_keys_per_batch)
 
 
 def compact_backlog(spark: SparkSession, backlog_store: str, out_path: str) -> None:

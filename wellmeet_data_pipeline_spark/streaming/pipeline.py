@@ -4,14 +4,20 @@ The reference's choreography — S3 ObjectCreated -> Lambda -> AWS Batch ->
 Lambda (§3.3: 4 processes, 3 network hops) — collapses into file-source
 micro-batches:
 
-  T1 trigger        readStream on the landing dir + Trigger.AvailableNow
-                    (drain-to-quiescence = the reference's event-per-upload
-                    + convergence loop R5)
+  T1 trigger        `landing_stream` (readStream on the landing dir) +
+                    `run_available_now` (Trigger.AvailableNow, blocking)
+                    = the reference's event-per-upload + convergence loop
+                    R5.  Every streaming module reads and activates
+                    through these two; no other module builds a reader or
+                    a trigger of its own
   T2 state          the file-source checkpoint tracks processed files;
                     cross-batch id dedup via watermark + dropDuplicates
   T4 idempotency    foreachBatch -> merge_append sink (exactly-once per id
                     through the dedup-on-read view)
-  T5 backpressure   maxFilesPerTrigger replaces the [:10] caps and sleeps
+  T5 backpressure   orchestration's `max_keys_per_batch` caps the per-key
+                    fan-out a micro-batch materializes (overflow waits in
+                    the durable backlog), replacing the [:10] caps and
+                    sleeps
   T6 late data      explicit watermark instead of the silent newest-first
                     assumption (naver_crawler.py:243-247)
 """
@@ -20,24 +26,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append
 
 
-def landing_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    schema: StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def landing_stream(spark: SparkSession, landing_dir: str, schema: StructType) -> DataFrame:
     """T1/S6: the landing directory IS the event source — every new file is
     an ObjectCreated record (submit-aws-batch-lambda/lambda_function.py:
     33-39) without the Lambda hop."""
-    reader = spark.readStream.schema(schema).option("multiLine", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(landing_dir)
+    return spark.readStream.schema(schema).option("multiLine", "true").json(landing_dir)
+
+
+def run_available_now(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """T1: one activation — drain every file landed so far under the
+    checkpoint at `checkpoint_dir`, then return.  Blocks until the query
+    stops; a failed micro-batch raises here, and the next activation
+    replays it from the checkpoint."""
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def run_ingest_pipeline(
@@ -61,13 +73,7 @@ def run_ingest_pipeline(
         merge_append(fresh, store_path, id_col=id_col, partition_col=partition_col,
                      batch_seq=batch_id)
 
-    (
-        valid.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(valid.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def run_windowed_counts(
@@ -94,14 +100,9 @@ def run_windowed_counts(
             "n_events",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        agg.writeStream.outputMode("append").format("parquet").option("path", out_path),
+        checkpoint_dir,
     )
 
 
@@ -147,14 +148,9 @@ def run_session_windows(
             "sum_value",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        agg.writeStream.outputMode("append").format("parquet").option("path", out_path),
+        checkpoint_dir,
     )
 
 
@@ -211,14 +207,9 @@ def run_stream_stream_range_join(
         "r_event_id",
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("delta_us"),
     )
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        joined.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -277,12 +268,7 @@ def run_stream_stream_left_outer_join(
         "r_event_id",
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("delta_us"),
     )
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        joined.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
     )

@@ -44,7 +44,7 @@ from wellmeet_data_pipeline_spark.operators.retrieval import (
     bm25_rank_cut,
 )
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_lexical_index_pipeline(
@@ -105,13 +105,9 @@ def run_lexical_index_pipeline(
         merge_append(doclen, f"{store_path}/doclen", id_col=id_col,
                      partition_col=None, batch_seq=batch_id)
 
-    (
-        landing_stream(spark, landing_dir, schema)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        landing_stream(spark, landing_dir, schema).writeStream.foreachBatch(write_batch),
+        checkpoint_dir,
     )
 
 

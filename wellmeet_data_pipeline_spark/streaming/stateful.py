@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
+
 _STATE_SCHEMA = "seen integer"
 
 
@@ -71,18 +73,11 @@ def run_stateful_dedup(
     """availableNow pipeline: landing JSON -> stateful first-per-id ->
     parquet append.  Re-delivered ids in later activations never reach the
     sink (contrast sinks.merge, which admits them and hides them on read)."""
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
-
     stream = landing_stream(spark, landing_dir, schema)
     deduped = dedup_stream_by_id(stream, id_col)
-    (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_available_now(
+        deduped.writeStream.outputMode("append").format("parquet").option("path", out_path),
+        checkpoint_dir,
     )
 
 
@@ -230,8 +225,6 @@ def run_streaming_transitions(
     partial-count store contract shared with the CUSUM / PSI / hot-key
     monitors (streaming/analytics.py)."""
     from wellmeet_data_pipeline_spark.sinks.merge import merge_append
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
-
     stream = landing_stream(spark, landing_dir, schema)
     trans = transition_stream(stream, entity_col, ts_col, id_col, state_col)
 
@@ -249,13 +242,7 @@ def run_streaming_transitions(
             batch_seq=batch_id,
         )
 
-    (
-        trans.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(trans.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_transition_probs(spark, store_path: str) -> DataFrame:

@@ -38,7 +38,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_available_now
 
 
 def run_streaming_domain_caps(
@@ -99,13 +99,7 @@ def run_streaming_domain_caps(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_domain_survivors(
