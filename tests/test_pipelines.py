@@ -162,3 +162,86 @@ def test_ingest_reviews_scopes_identity_per_place(spark, tmp_path):
     again = ingest_reviews(spark, ["p1", "p2"], fetch, store, batch_seq=1)
     assert again.count() == 0
     assert read_current(spark, store, id_col=["place_id", "id"]).count() == 2
+
+
+def test_ingest_reviews_reads_only_the_chunks_places(spark, tmp_path):
+    """The existence check reads only the ingested places' partitions, as
+    the reference reads only {place_id}.json (storage_manager.py:25-61):
+    a corrupt part file under another place cannot fail the ingest, while
+    one under the place being ingested still does."""
+    import glob
+
+    import pytest
+
+    store = str(tmp_path / "rev_scoped")
+    ingest_reviews(spark, ["p1"], _review_fetcher(), store)
+    for part in glob.glob(f"{store}/batch_commit=0/place_id=p1/*.parquet"):
+        with open(part, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    fresh = ingest_reviews(spark, ["p2"], _review_fetcher(), store, batch_seq=1)
+    assert fresh.count() == 3
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ingest_reviews(spark, ["p1"], _review_fetcher(), store, batch_seq=2)
+
+
+def test_ingest_reviews_reingest_finds_escaped_and_compacted_partitions(spark, tmp_path):
+    """Spark percent-escapes partition directory names ('/' and '=' here);
+    the scoped existence check must find the escaped directory, in the
+    batch layout and in the compacted one (no batch_commit level)."""
+    from wellmeet_data_pipeline_spark.sinks.merge import compact
+
+    store = str(tmp_path / "rev_escape")
+    pid = "a/b c=d"
+    first = ingest_reviews(spark, [pid], _review_fetcher(), store)
+    assert first.count() == 3
+    again = ingest_reviews(spark, [pid], _review_fetcher(), store, batch_seq=1)
+    assert again.count() == 0
+    compacted = str(tmp_path / "rev_escape_compacted")
+    compact(spark, store, compacted, id_col=["place_id", "id"])
+    assert ingest_reviews(spark, [pid], _review_fetcher(), compacted, batch_seq=1).count() == 0
+
+
+def test_scoped_review_read_matches_read_current_with_mixed_claims(spark, tmp_path):
+    """A claimed store (it has a `_commits` ledger) holding an in-flight
+    claim below a committed batch, and an explicit-seq batch above the
+    pin: the scoped existence read and read_current expose the same rows,
+    so the two readers cannot drift apart."""
+    from wellmeet_data_pipeline_spark.operators.projections import project_review
+    from wellmeet_data_pipeline_spark.pipelines import _stored_review_keys
+    from wellmeet_data_pipeline_spark.sinks.merge import claim_batch_seq, merge_append
+
+    store = str(tmp_path / "rev_mixed")
+
+    def batch(content):
+        rows = [("a", content, "d", pid) for pid in ("p1", "p2", "p3")]
+        raw = spark.createDataFrame(rows, "author string, content string, visit_date string, place_id string")
+        return project_review(raw)
+
+    def keys(df):
+        return sorted((str(r["place_id"]), r["id"]) for r in df.select("place_id", "id").collect())
+
+    assert merge_append(batch("c0"), store, id_col="id", batch_seq=None) == 0
+    assert claim_batch_seq(store) == 1  # in flight: claimed, not committed
+    assert merge_append(batch("c2"), store, id_col="id", batch_seq=None) == 2
+    merge_append(batch("c3"), store, id_col="id", batch_seq=1_000_000)  # explicit seq
+
+    full = keys(read_current(spark, store, id_col=["place_id", "id"]))
+    scoped = keys(_stored_review_keys(spark, store, ["p1", "p2", "p3"]))
+    assert scoped == full
+    assert len(full) == 3  # only seq 0 is below the pin
+    assert keys(_stored_review_keys(spark, store, ["p2"])) == [k for k in full if k[0] == "p2"]
+
+
+def test_fanout_modules_build_no_pickled_frames():
+    """Driver-built frames on the fan-out path go through
+    session.local_frame (an Arrow local relation), never
+    createDataFrame(<list>), whose pickled RDD runs a Python-worker stage
+    with one task per core."""
+    from pathlib import Path
+
+    import wellmeet_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    for rel in ("pipelines.py", "sources/ingest.py", "streaming/orchestration.py"):
+        assert "createDataFrame(" not in (root / rel).read_text(), rel

@@ -43,11 +43,23 @@ def _make_fetcher():
 
 
 def test_seed_and_fetch(spark):
+    from pyspark.sql import functions as F
+
     seeds = seed_frame(spark, ["p1", "p2"], pages=4)
     assert seeds.count() == 8
     assert seeds.rdd.getNumPartitions() == 8  # partition-per-page (S3/R6)
     rows = fetch_rows(seeds, _make_fetcher(), REVIEW)
     assert rows.count() == 24
+    # one unit in EVERY task, not just n partitions: a round-robin
+    # repartition of n rows can leave several units in one partition
+    for keys, pages in [(["p1", "p2"], 4), ([f"k{i}" for i in range(5)], 1)]:
+        per_task = (
+            seed_frame(spark, keys, pages)
+            .groupBy(F.spark_partition_id().alias("task"))
+            .count()
+            .collect()
+        )
+        assert sorted(r["count"] for r in per_task) == [1] * (len(keys) * pages), (keys, pages)
 
 
 def test_incremental_ingest_anti_join(spark):

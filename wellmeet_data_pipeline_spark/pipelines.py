@@ -32,7 +32,9 @@ from wellmeet_data_pipeline_spark.operators.projections import (
 )
 from wellmeet_data_pipeline_spark.operators.joins import insert_if_absent
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT, REVIEW
+from wellmeet_data_pipeline_spark.session import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import (
+    committed_partition_dirs,
     merge_append,
     read_current_or_none,
 )
@@ -65,7 +67,7 @@ def discover_restaurants(
     cur = read_current_or_none(spark, store_path, id_col="place_id")
     existing = (
         cur.select("place_id") if cur is not None
-        else spark.createDataFrame([], "place_id string")
+        else local_frame(spark, [], "place_id string")
     )
     fresh = incremental_ingest(projected.filter(F.col("place_id").isNotNull()), existing, "place_id")
     merge_append(fresh, store_path, id_col="place_id", partition_col=None, batch_seq=batch_seq)
@@ -90,15 +92,30 @@ def ingest_reviews(
     raw_schema = "author string, content string, visit_date string, place_id string"
     seeds = seed_frame(spark, place_ids, pages)
     raw = fetch_rows(seeds, fetcher, raw_schema)
-    reviews = project_review(raw)
-    cur = read_current_or_none(spark, store_path, id_col=["place_id", "id"])
-    existing = (
-        cur.select("place_id", "id") if cur is not None
-        else spark.createDataFrame([], "place_id string, id string")
-    )
-    fresh = incremental_ingest(reviews, existing, ["place_id", "id"])
+    fresh = project_review(raw)
+    stored = _stored_review_keys(spark, store_path, place_ids)
+    if stored is not None:
+        fresh = incremental_ingest(fresh, stored, ["place_id", "id"])
     merge_append(fresh, store_path, id_col="id", partition_col="place_id", batch_seq=batch_seq)
     return fresh
+
+
+def _stored_review_keys(
+    spark: SparkSession, store_path: str, place_ids: list[str]
+) -> DataFrame | None:
+    """(place_id, id) of the reviews already stored for `place_ids` — the
+    reference reads only {place_id}.json for the place it crawls
+    (storage_manager.py:25-61), so the existence check reads only these
+    places' committed partition directories, never the whole store.  None
+    when none of them has any."""
+    dirs = committed_partition_dirs(store_path, "place_id", place_ids)
+    if not dirs:
+        return None
+    return (
+        spark.read.schema("place_id string, id string")
+        .option("basePath", store_path)
+        .parquet(*dirs)
+    )
 
 
 def process_landed_restaurants(

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -52,3 +53,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A driver-built frame as an Arrow local relation (a LocalTableScan).
+
+    `spark.createDataFrame(<list>, schema)` pickles the list into an RDD
+    and re-serializes it in a Python-worker stage with one task per core
+    inside every job that reads it; a `pyarrow.Table` goes to the JVM
+    once, as a local relation.  Every small frame the pipelines
+    build on the driver (seed units, backlog marks, empty-store fallbacks)
+    goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

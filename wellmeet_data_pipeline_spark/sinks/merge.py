@@ -220,6 +220,38 @@ def committed_seq_pin(path: str, stale_claim_seconds: float = STALE_CLAIM_SECOND
     return pin
 
 
+# Characters Spark percent-escapes in partition directory names
+# (ExternalCatalogUtils.escapePathName, non-Windows set)
+_PATH_ESCAPED = frozenset(
+    [chr(c) for c in range(1, 0x20)]
+    + ['"', "#", "%", "'", "*", "/", ":", "=", "?", "\\", "\x7f", "{", "[", "]", "^"]
+)
+
+
+def committed_partition_dirs(path: str, partition_col: str, values: list[str]) -> list[str]:
+    """The committed `<partition_col>=<v>` directories of `values` that
+    `read_current` reads: under every `batch_commit=<seq>` at or below the
+    same `committed_seq_pin`, and directly under the store (the compacted
+    layout).  Reading just these, with `basePath` set to the store, scopes
+    a lookup to a few partitions instead of listing and scanning every
+    stored batch.  Values are escaped the way Spark names partition
+    directories; a value with no committed directory contributes none."""
+    pin = committed_seq_pin(path)
+    parents = [path] + [
+        os.path.join(path, f"{BATCH_DIR_KEY}={seq}")
+        for seq in sorted(committed_batch_seqs(path))
+        if pin is None or seq <= pin
+    ]
+    names = [
+        f"{partition_col}=" + "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in v)
+        for v in values
+    ]
+    return [
+        d for parent in parents for name in names
+        if os.path.isdir(d := os.path.join(parent, name))
+    ]
+
+
 def read_current(
     spark: SparkSession,
     path: str,

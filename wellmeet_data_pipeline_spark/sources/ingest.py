@@ -2,10 +2,10 @@
 
 The reference crawls a paginated remote feed per key (naver_crawler.py:
 257-309) with 4-way page parallelism (restaurant-crawler.py:354-369).
-The Spark-native shape: a *seed frame* of (key, page) work units,
-repartitioned so each task owns one unit, and a mapInPandas fetch that
-turns the remote feed into rows — the scheduler replaces asyncio.gather,
-and a high-water-mark predicate replaces the ordered early-exit (J3/R2).
+The Spark-native shape: a *seed frame* of (key, page) work units, one
+unit per task, and a mapInPandas fetch that turns the remote feed into
+rows — the scheduler replaces asyncio.gather, and a high-water-mark
+predicate replaces the ordered early-exit (J3/R2).
 
 The fetcher is injected so tests (and the t2 path) use a deterministic
 local function; network code never enters the correctness surface.
@@ -20,14 +20,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.session import local_frame
+
 
 def seed_frame(spark: SparkSession, keys: list[str], pages: int) -> DataFrame:
-    """S3 (restaurant-crawler.py:354-369): one work unit per (key, page).
-    Repartition to one unit per task — partition-per-page is the Spark twin
-    of the reference's asyncio.gather over pages 1..4."""
-    rows = [(k, p) for k in keys for p in range(1, pages + 1)]
-    df = spark.createDataFrame(rows, "key string, page int")
-    return df.repartition(max(len(rows), 1))
+    """S3 (restaurant-crawler.py:354-369): one work unit per (key, page),
+    exactly one unit per task — partition-per-page is the Spark twin of
+    the reference's asyncio.gather over pages 1..4.
+
+    The units are an indexed driver-built local relation, broadcast and
+    joined on the index of a `range` with one row per partition, so task i
+    holds unit i with no shuffle and no Python stage.  (A round-robin
+    `repartition(n)` of n rows does not spread them one per partition.)"""
+    units = [(k, p) for k in keys for p in range(1, pages + 1)]
+    n = max(len(units), 1)
+    indexed = local_frame(
+        spark, [(i, k, p) for i, (k, p) in enumerate(units)], "id long, key string, page int"
+    )
+    return spark.range(0, n, 1, n).join(F.broadcast(indexed), "id").select("key", "page")
 
 
 def fetch_rows(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from wellmeet_data_pipeline_spark.operators.projections import fill_rds_defaults, require_fields
 from wellmeet_data_pipeline_spark.pipelines import ingest_reviews
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT
+from wellmeet_data_pipeline_spark.session import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import (
     committed_batch_seqs,
     merge_append,
@@ -86,9 +87,12 @@ def _ingest_pending(
     review_fetcher: Callable[[str, int], list[dict]],
     max_keys: int | None,
     batch_seq: int,
-) -> None:
-    """Ingest up to `max_keys` pending keys, marking them done afterwards.
+) -> int:
+    """Ingest up to `max_keys` pending keys, marking them done afterwards;
+    returns how many keys the chunk held.
 
+    The chunk is collected before anything is appended, so `pending` (a
+    plan over the log this appends to) is evaluated exactly once.
     At-least-once order: the 'todo' marks are already durable (appended by
     the caller before this runs); the chunk is ingested (review merge is
     idempotent on (place_id, id), so a crash-replay of the chunk is
@@ -96,11 +100,11 @@ def _ingest_pending(
     ingest and the done-append re-ingests the chunk later — nothing is
     ever lost, because no step deletes log data."""
     chunk = _take_chunk(pending, max_keys)
-    if not chunk:
-        return
-    ingest_reviews(spark, chunk, review_fetcher, review_store, batch_seq=batch_seq)
-    chunk_df = spark.createDataFrame([(k,) for k in chunk], "place_id string")
-    _append_marks(chunk_df, backlog_store, "done")
+    if chunk:
+        ingest_reviews(spark, chunk, review_fetcher, review_store, batch_seq=batch_seq)
+        _append_marks(local_frame(spark, [(k,) for k in chunk], "place_id string"),
+                      backlog_store, "done")
+    return len(chunk)
 
 
 def _check_cap(max_keys_per_batch: int | None) -> None:
@@ -117,6 +121,10 @@ def drain_backlog(
 ) -> None:
     """Drain any carried-over fan-out backlog to empty, one chunk of at
     most `max_keys_per_batch` keys (None: all pending keys) per round.
+    Each round reads the pending keys once; the drain stops after a round
+    that took fewer keys than the cap (after one round when uncapped):
+    nothing else appends to the backlog while it runs, so a short chunk
+    was the last of it.
 
     Each round commits its reviews under a fresh seq past every drain seq
     already in the review store, so no drain re-opens an earlier batch
@@ -126,13 +134,15 @@ def drain_backlog(
     seq = max([DRAIN_SEQ_BASE - 1, *committed_batch_seqs(review_store)])
     while True:
         pending = _read_pending(spark, backlog_store)
-        if pending is None or pending.isEmpty():
+        if pending is None:
             return
         seq += 1
-        _ingest_pending(
-            spark, pending.localCheckpoint(eager=True), backlog_store, review_store,
+        taken = _ingest_pending(
+            spark, pending, backlog_store, review_store,
             review_fetcher, max_keys_per_batch, seq,
         )
+        if max_keys_per_batch is None or taken < max_keys_per_batch:
+            return
 
 
 def run_orchestration(
@@ -172,7 +182,7 @@ def run_orchestration(
         cur = read_current_or_none(spark, restaurant_store, id_col="place_id")
         existing = (
             cur.select("place_id") if cur is not None
-            else spark.createDataFrame([], "place_id string")
+            else local_frame(spark, [], "place_id string")
         )
         fresh = valid.join(existing, "place_id", "left_anti")
         # K5's one-Batch-job-per-restaurant → todo marks over the NEW keys,
@@ -190,10 +200,8 @@ def run_orchestration(
         pending = _read_pending(spark, backlog_store)
         if pending is None:
             return
-        # materialize BEFORE _ingest_pending appends done-marks: the
-        # pending lineage reads the log being appended to
         _ingest_pending(
-            spark, pending.localCheckpoint(eager=True), backlog_store, review_store,
+            spark, pending, backlog_store, review_store,
             review_fetcher, max_keys_per_batch, batch_id,
         )
 
@@ -209,7 +217,7 @@ def compact_backlog(spark: SparkSession, backlog_store: str, out_path: str) -> N
     committed); marks keep accumulating otherwise."""
     pending = _read_pending(spark, backlog_store)
     if pending is None:
-        pending = spark.createDataFrame([], "place_id string")
+        pending = local_frame(spark, [], "place_id string")
     pending.select("place_id", F.lit("todo").alias("_op")).write.mode(
         "error"
     ).parquet(out_path)
